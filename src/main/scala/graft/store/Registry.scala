@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (`notebooks/feature_store_register.py`): `get_table` / `register_table`
   * / `drop_table` / `add_data_sources` / `delete_data_sources`.
   *
-  * Persistence is one JSON document per table under `<path>/<table>.json`
-  * (parsed with Spark's JSON reader, like [[TableStore]] `_meta.json` — no
-  * external JSON dependency). The registry is pure metadata: entries point
+  * Persistence is one JSON document per table under `<path>/<table>.json`,
+  * parsed on the driver like [[TableStore]]'s `_meta.json` ([[MetaJson]]):
+  * a lookup runs no Spark job. The registry is pure metadata: entries point
   * at [[TableStore]] tables, they never hold data. Registration is a
   * driver-side catalog write — nothing here touches the executor path, so
   * there is no scale dimension beyond "one small file per feature table".
@@ -30,47 +30,22 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
 
   private def entryPath(table: String): Path = Paths.get(path, s"$table.json")
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def writeEntry(e: Entry): Unit = {
-    def arr(xs: Seq[String]) = xs.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")
-    val tags = e.tags.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val json = s"""{"table":"${esc(e.table)}","schemaJson":"${esc(e.schemaJson)}",""" +
-      s""""primaryKeys":${arr(e.primaryKeys)},"timestampKeys":${arr(e.timestampKeys)},""" +
-      s""""description":"${esc(e.description)}","tags":$tags,"dataSources":${arr(e.dataSources)}}"""
-    Files.createDirectories(Paths.get(path))
-    Files.writeString(entryPath(e.table), json)
+    import org.json4s.JsonDSL._
+    MetaJson.write(entryPath(e.table),
+      ("table" -> e.table) ~ ("schemaJson" -> e.schemaJson) ~
+        ("primaryKeys" -> e.primaryKeys) ~ ("timestampKeys" -> e.timestampKeys) ~
+        ("description" -> e.description) ~ ("tags" -> e.tags) ~
+        ("dataSources" -> e.dataSources))
   }
 
   /** `fs.get_table` (`feature_store_register.py:83-96,117`). */
-  def getTable(table: String): Option[Entry] = {
-    val p = entryPath(table)
-    if (!Files.exists(p)) None
-    else {
-      import spark.implicits._
-      val row = spark.read
-        .schema("table STRING, schemaJson STRING, primaryKeys ARRAY<STRING>, " +
-          "timestampKeys ARRAY<STRING>, description STRING, " +
-          "tags MAP<STRING,STRING>, dataSources ARRAY<STRING>")
-        .json(Seq(Files.readString(p)).toDS()).first()
-      Some(Entry(
-        row.getAs[String]("table"),
-        row.getAs[String]("schemaJson"),
-        Option(row.getAs[scala.collection.Seq[String]]("primaryKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[scala.collection.Seq[String]]("timestampKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[String]("description")).getOrElse(""),
-        Option(row.getAs[scala.collection.Map[String, String]]("tags")).map(_.toMap).getOrElse(Map.empty),
-        Option(row.getAs[scala.collection.Seq[String]]("dataSources")).map(_.toSeq).getOrElse(Nil)))
+  def getTable(table: String): Option[Entry] =
+    MetaJson.read(entryPath(table)).map { d =>
+      Entry(d.str("table"), d.str("schemaJson"), d.strs("primaryKeys"),
+        d.strs("timestampKeys"), d.str("description"), d.strMap("tags"),
+        d.strs("dataSources"))
     }
-  }
 
   def tableExists(table: String): Boolean = getTable(table).isDefined
 
@@ -81,11 +56,13 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
       .map(_.stripSuffix(".json")).toSeq.sorted
 
   /** `fs.register_table`: create the entry, or update keys/description/tags
-    * in place when the recorded schema matches; raise
+    * in place when the recorded schema matches (no write when nothing
+    * changed); raise
     * [[SchemaConflictException]] when it does not — the exact signal the
     * notebook's recovery path keys on
     * (`feature_store_register.py:169-170`). Data-source lineage is NOT
-    * touched here (the notebook reconciles it separately). */
+    * touched here (the notebook reconciles it separately): the returned
+    * entry carries the recorded sources unchanged. */
   def registerTable(table: String, schema: StructType, primaryKeys: Seq[String],
                     timestampKeys: Seq[String], description: String = "",
                     tags: Map[String, String] = Map.empty): Entry = {
@@ -99,7 +76,9 @@ final class FeatureRegistry(spark: SparkSession, path: String) {
       case Some(cur) =>
         val e = cur.copy(schemaJson = schemaJson, primaryKeys = primaryKeys,
           timestampKeys = timestampKeys, description = description, tags = tags)
-        writeEntry(e); e
+        // metadata-delta rule (utils.py:1482-1487): rewrite only on change
+        if (e != cur) writeEntry(e)
+        e
       case None =>
         val e = Entry(table, schemaJson, primaryKeys, timestampKeys, description, tags, Nil)
         writeEntry(e); e
@@ -186,18 +165,14 @@ object Registration {
                                    tags: Map[String, String],
                                    sourceTables: Seq[String]): Unit = {
     val (pks, tks) = defaultKeys(table)
-    val existing = registry.getTable(table)
-    registry.registerTable(table, schema, pks, tks, description, tags) // may throw conflict
-    existing match {
-      case Some(cur) =>
-        val currentSources = cur.dataSources
-        val differs = currentSources.toSet != sourceTables.toSet
-        if (sourceTables.nonEmpty && differs) {
-          if (currentSources.nonEmpty) registry.deleteDataSources(table, currentSources)
-          registry.addDataSources(table, sourceTables)
-        }
-      case None =>
-        if (sourceTables.nonEmpty) registry.addDataSources(table, sourceTables)
+    // may throw conflict; the entry carries the recorded lineage (Nil for
+    // a new entry), so one read serves both the registration and the
+    // reconciliation
+    val currentSources =
+      registry.registerTable(table, schema, pks, tks, description, tags).dataSources
+    if (sourceTables.nonEmpty && currentSources.toSet != sourceTables.toSet) {
+      if (currentSources.nonEmpty) registry.deleteDataSources(table, currentSources)
+      registry.addDataSources(table, sourceTables)
     }
   }
 

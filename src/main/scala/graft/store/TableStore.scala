@@ -24,7 +24,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - time travel: read version N-1 (`monitor.py:57-71`);
   *  - replaceWhere partition-scoped overwrite (`storage_operations.py:161-202`);
   *  - OPTIMIZE-style compaction (`utils.py:1761-1767`) = repartition rewrite;
-  *  - TBLPROPERTIES (`utils.py:1440-1504`) = key/values in _meta.json.
+  *  - TBLPROPERTIES (`utils.py:1440-1504`) = key/values in _meta.json;
+  *  - append (`monitor.py:648-662`) = a file-level append: the new version
+  *    hardlinks the previous files and writes only the batch.
+  *
+  * Metadata stays off the Spark scheduler, as a Delta log is read by the
+  * driver: `_meta.json` is parsed on the driver ([[MetaJson]]), so
+  * [[meta]], [[exists]] and [[currentVersion]] run no Spark job, and
+  * [[read]] of a plain snapshot passes the recorded schema instead of
+  * running Parquet's schema-inference job.
   *
   * Scale note: snapshots are written with the caller's partitioning; the
   * upsert path shuffles once on the primary keys — at cluster scale the
@@ -89,53 +97,24 @@ final class TableStore(spark: SparkSession, root: String) {
 
   import TableStore.Meta
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def writeMeta(table: String, m: Meta): Unit = {
-    val props = m.properties.map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString("{", ",", "}")
-    val json =
-      s"""{"version":${m.version},"schemaJson":"${esc(m.schemaJson)}",
-         |"primaryKeys":[${m.primaryKeys.map(k => s""""${esc(k)}"""").mkString(",")}],
-         |"timestampKeys":[${m.timestampKeys.map(k => s""""${esc(k)}"""").mkString(",")}],
-         |"buckets":${m.buckets},
-         |"partitionCols":[${m.partitionCols.map(k => s""""${esc(k)}"""").mkString(",")}],
-         |"description":"${esc(m.description)}","properties":$props}""".stripMargin.replace("\n", "")
-    Files.createDirectories(tableDir(table))
-    Files.writeString(metaPath(table), json)
+    import org.json4s.JsonDSL._
+    MetaJson.write(metaPath(table),
+      ("version" -> m.version) ~ ("schemaJson" -> m.schemaJson) ~
+        ("primaryKeys" -> m.primaryKeys) ~ ("timestampKeys" -> m.timestampKeys) ~
+        ("buckets" -> m.buckets) ~ ("partitionCols" -> m.partitionCols) ~
+        ("description" -> m.description) ~ ("properties" -> m.properties))
   }
 
-  /** Parse _meta.json via Spark's JSON reader (no external JSON dep). */
-  def meta(table: String): Option[Meta] = {
-    val p = metaPath(table)
-    if (!Files.exists(p)) None
-    else {
-      import spark.implicits._
-      val row = spark.read
-        .schema("version INT, schemaJson STRING, primaryKeys ARRAY<STRING>, " +
-          "timestampKeys ARRAY<STRING>, buckets INT, partitionCols ARRAY<STRING>, " +
-          "description STRING, properties MAP<STRING,STRING>")
-        .json(Seq(Files.readString(p)).toDS()).first()
-      Some(Meta(
-        row.getAs[Int]("version"),
-        row.getAs[String]("schemaJson"),
-        Option(row.getAs[scala.collection.Seq[String]]("primaryKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[scala.collection.Seq[String]]("timestampKeys")).map(_.toSeq).getOrElse(Nil),
-        Option(row.getAs[java.lang.Integer]("buckets")).fold(0)(_.intValue),
-        Option(row.getAs[String]("description")).getOrElse(""),
-        Option(row.getAs[scala.collection.Map[String, String]]("properties")).map(_.toMap).getOrElse(Map.empty),
-        Option(row.getAs[scala.collection.Seq[String]]("partitionCols")).map(_.toSeq).getOrElse(Nil)))
+  /** Parse _meta.json on the driver ([[MetaJson]]): no Spark job. */
+  def meta(table: String): Option[Meta] =
+    MetaJson.read(metaPath(table)).map { d =>
+      Meta(d.int("version"), d.str("schemaJson"), d.strs("primaryKeys"),
+        d.strs("timestampKeys"), d.int("buckets"), d.str("description"),
+        d.strMap("properties"), d.strs("partitionCols"))
     }
-  }
 
-  def exists(table: String): Boolean = meta(table).isDefined
+  def exists(table: String): Boolean = Files.exists(metaPath(table))
 
   def setProperties(table: String, props: Map[String, String]): Unit =
     withWriteLock(table) {
@@ -147,9 +126,16 @@ final class TableStore(spark: SparkSession, root: String) {
 
   // ----------------------------------------------------------------- read
 
+  /** The current snapshot. A plain snapshot is read with its recorded
+    * schema, which is the schema of its files — that skips Parquet's
+    * footer-inference job, one per read. Bucketed snapshots read through
+    * their catalog entry; hive-partitioned ones keep inference, which
+    * orders the columns as data columns, then partition columns. */
   def read(table: String): DataFrame = {
     val m = meta(table).getOrElse(sys.error(s"no such table: $table"))
-    readVersionWith(table, m.version, m.buckets)
+    if (m.buckets == 0 && m.partitionCols.isEmpty)
+      spark.read.schema(m.schema).parquet(versionDir(table, m.version).toString)
+    else readVersionWith(table, m.version, m.buckets)
   }
 
   /** Time travel (S13): read any retained snapshot. Bucketed snapshots are
@@ -166,21 +152,32 @@ final class TableStore(spark: SparkSession, root: String) {
     else spark.read.parquet(versionDir(table, version).toString)
   }
 
-  /** Append-only log write: current ∪ rows as a new snapshot version
-    * (creates the table on first call). NOTE this is a snapshot store —
-    * "append" rewrites the table; intended for validation/monitoring logs
-    * (rows per run, not data volume). For data-volume appends use
-    * [[appendFiles]]. */
+  /** Append rows as a new snapshot version (creates the table on first
+    * call) — the Delta `append` of the validation and monitoring logs
+    * (`monitor.py:648-662`). When the table is unbucketed and `df` has the
+    * stored schema (by name and type, any column order), this is
+    * [[appendFiles]]: the new version hardlinks the previous files and
+    * writes only the batch, so the cost stays flat as the log grows.
+    * Otherwise the table is rewritten as current ∪ rows: a bucketed
+    * layout, or schema evolution — columns new to the table are appended
+    * and null-padded on the stored rows, stored columns missing from `df`
+    * are null-padded on the new rows, and a type change fails. */
   def append(table: String, df: DataFrame): Unit = withWriteLock(table) {
-    if (exists(table)) overwrite(table, read(table).unionByName(df))
-    else overwrite(table, df)
+    meta(table) match {
+      case Some(m) if m.buckets == 0 && SchemaDiff.diff(m.schema, df.schema).isCompatible =>
+        appendFiles(table, df)
+      case Some(_) =>
+        overwrite(table, read(table).unionByName(df, allowMissingColumns = true),
+          mergeSchema = true)
+      case None => overwrite(table, df)
+    }
   }
 
   /** FILE-LEVEL append: the new snapshot version is hardlinks of every
     * previous data file plus `df`'s files written alongside — O(batch)
-    * data written + O(files) inode links, never a table rewrite (the
-    * [[append]] above unions-and-rewrites; [[upsert]] rewrites too). This
-    * is the log-structured form a per-trigger streaming ingest needs:
+    * data written + O(files) inode links, never a table rewrite (as
+    * [[upsert]] is). This is the log-structured form a per-trigger
+    * streaming ingest needs:
     * measured r13 (`datagen.StreamAnchor` at sf1), the containment ingest
     * gate's per-trigger cost was INDEX-sized under upsert re-seeding
     * (~32–48 s per 10k-doc trigger, growing with the accumulated corpus)

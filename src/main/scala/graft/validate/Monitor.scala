@@ -24,8 +24,12 @@ import graft.store.TableStore
   *    list (`monitor.py:636`), null when everything passed.
   *
   * Scale: detail/summary rows are O(validations) per run — a driver-built
-  * micro-frame appended to the store; no data-sized shuffle. The log tables
-  * grow append-only and stay queryable as ordinary tables.
+  * micro-frame appended to the store; no data-sized shuffle. The append is
+  * file-level ([[TableStore.append]]): each run writes only its own rows
+  * and hardlinks the earlier runs' files, so the data a save writes does
+  * not grow with the log (its hardlinks do, one per earlier file, until
+  * [[TableStore.compact]]). The log tables grow append-only and stay
+  * queryable as ordinary tables.
   */
 object Monitor {
 

@@ -84,6 +84,54 @@ class RegistrySpec extends AnyFunSuite {
     assert(err.getMessage.contains("different schema"))
   }
 
+  /** Spark's JSON reader over a registry entry — the parse the registry
+    * once ran as a Spark job per lookup; the driver parse must agree. */
+  private def sparkReaderEntry(json: String): FeatureRegistry.Entry = {
+    val row = spark.read
+      .schema("table STRING, schemaJson STRING, primaryKeys ARRAY<STRING>, " +
+        "timestampKeys ARRAY<STRING>, description STRING, " +
+        "tags MAP<STRING,STRING>, dataSources ARRAY<STRING>")
+      .json(Seq(json).toDS()).first()
+    FeatureRegistry.Entry(
+      row.getAs[String]("table"),
+      row.getAs[String]("schemaJson"),
+      Option(row.getAs[scala.collection.Seq[String]]("primaryKeys")).map(_.toSeq).getOrElse(Nil),
+      Option(row.getAs[scala.collection.Seq[String]]("timestampKeys")).map(_.toSeq).getOrElse(Nil),
+      Option(row.getAs[String]("description")).getOrElse(""),
+      Option(row.getAs[scala.collection.Map[String, String]]("tags")).map(_.toMap).getOrElse(Map.empty),
+      Option(row.getAs[scala.collection.Seq[String]]("dataSources")).map(_.toSeq).getOrElse(Nil))
+  }
+
+  test("registry entries: driver parse round-trips escapes, control and non-ASCII " +
+      "text and equals Spark's JSON reader; unchanged re-registration writes nothing") {
+    val dir = Files.createTempDirectory("graft_registry_json")
+    val registry = new FeatureRegistry(spark, dir.toString)
+    val tricky = "a \"quoted\" back\\slash\nline2\tcol\r\u0001\u001f " +
+      "ñandú 日本語 😀 {\"k\": [1]}"
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "pk_customer BIGINT, `odd \"name\"` STRING, m MAP<STRING, ARRAY<INT>>")
+    val e = registry.registerTable("fs_cus_odd", schema, Seq("pk_customer"), Seq("ts"),
+      description = tricky, tags = Map(tricky -> tricky, "empty" -> ""))
+    registry.addDataSources("fs_cus_odd", Seq(tricky, "pagos"))
+    val got = registry.getTable("fs_cus_odd").get
+    assert(got == e.copy(dataSources = Seq(tricky, "pagos")))
+    assert(got.schema == schema && got.description == tricky)
+    val file = dir.resolve("fs_cus_odd.json")
+    assert(sparkReaderEntry(Files.readString(file)) == got)
+    // identical re-registration leaves the entry file untouched
+    // (utils.py:1482-1487); a changed description rewrites it
+    val epoch = java.nio.file.attribute.FileTime.fromMillis(0L)
+    Files.setLastModifiedTime(file, epoch)
+    assert(registry.registerTable("fs_cus_odd", schema, Seq("pk_customer"), Seq("ts"),
+      description = tricky, tags = Map(tricky -> tricky, "empty" -> "")) == got)
+    assert(Files.getLastModifiedTime(file) == epoch)
+    registry.registerTable("fs_cus_odd", schema, Seq("pk_customer"), Seq("ts"),
+      description = "changed", tags = Map("empty" -> ""))
+    assert(Files.getLastModifiedTime(file) != epoch)
+    assert(registry.getTable("fs_cus_odd").get ==
+      got.copy(description = "changed", tags = Map("empty" -> "")))
+  }
+
   test("eligibleTasks mirrors the notebook task filter") {
     val keys = Seq("fs_cus_demographic", "fs_cus_register", "fs_registry_sync",
       "fs_cus_test_smoke", "cleanup", "fs_cus_transactions")

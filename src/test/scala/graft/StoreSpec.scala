@@ -427,6 +427,100 @@ class StoreSpec extends AnyFunSuite {
     assert(m.primaryKeys == Seq("k") && m.timestampKeys == Seq("k"))
   }
 
+  /** Spark's JSON reader over a `_meta.json` — the parse the store once ran
+    * as a Spark job per metadata read; the driver parse must agree with it. */
+  private def sparkReaderMeta(json: String): TableStore.Meta = {
+    val row = spark.read
+      .schema("version INT, schemaJson STRING, primaryKeys ARRAY<STRING>, " +
+        "timestampKeys ARRAY<STRING>, buckets INT, partitionCols ARRAY<STRING>, " +
+        "description STRING, properties MAP<STRING,STRING>")
+      .json(Seq(json).toDS()).first()
+    TableStore.Meta(
+      row.getAs[Int]("version"),
+      row.getAs[String]("schemaJson"),
+      Option(row.getAs[scala.collection.Seq[String]]("primaryKeys")).map(_.toSeq).getOrElse(Nil),
+      Option(row.getAs[scala.collection.Seq[String]]("timestampKeys")).map(_.toSeq).getOrElse(Nil),
+      Option(row.getAs[java.lang.Integer]("buckets")).fold(0)(_.intValue),
+      Option(row.getAs[String]("description")).getOrElse(""),
+      Option(row.getAs[scala.collection.Map[String, String]]("properties")).map(_.toMap).getOrElse(Map.empty),
+      Option(row.getAs[scala.collection.Seq[String]]("partitionCols")).map(_.toSeq).getOrElse(Nil))
+  }
+
+  test("_meta.json driver parse: escapes, control and non-ASCII text round-trip; " +
+      "equals Spark's JSON reader; a legacy document without buckets/partitionCols") {
+    val root = Files.createTempDirectory("graft_store_meta")
+    val store = new TableStore(spark, root.toString)
+    val tricky = "a \"quoted\" back\\slash\nline2\tcol\r\u0001\u001f\u007f " +
+      "ñandú 日本語 😀 {\"k\": [1]}"
+    store.overwrite("p", Seq((1, "x")).toDF("k", "v"), primaryKeys = Seq("k"),
+      timestampKeys = Seq("v"), description = tricky, partitionBy = Seq("v"))
+    store.setProperties("p", Map(tricky -> tricky, "empty" -> "", "team" -> "graft"))
+    val m = store.meta("p").get
+    assert(m.description == tricky)
+    assert(m.properties == Map(tricky -> tricky, "empty" -> "", "team" -> "graft"))
+    assert(m.primaryKeys == Seq("k") && m.timestampKeys == Seq("v"))
+    assert(m.partitionCols == Seq("v") && m.buckets == 0 && m.version == 0)
+    assert(m.schema == Seq((1, "x")).toDF("k", "v").schema)
+    val json = Files.readString(root.resolve("p").resolve("_meta.json"))
+    assert(sparkReaderMeta(json) == m)
+    // a document written before `buckets` and `partitionCols` existed, in
+    // the hand-escaped form the store wrote then (lowercase \u escapes)
+    val schemaJson = StructType.fromDDL("k INT, v STRING").json
+    val legacy = s"""{"version":3,"schemaJson":"${schemaJson.replace("\"", "\\\"")}",""" +
+      """"primaryKeys":["k"],"timestampKeys":[],""" +
+      """"description":"old \"one\"\nline CTRL ñ","properties":{"team":"graft"}}"""
+        .replace("CTRL", "\\u0001")
+    Files.createDirectories(root.resolve("legacy"))
+    Files.writeString(root.resolve("legacy").resolve("_meta.json"), legacy)
+    val lm = store.meta("legacy").get
+    assert(lm == TableStore.Meta(3, schemaJson, Seq("k"), Nil, 0,
+      "old \"one\"\nline \u0001 ñ", Map("team" -> "graft"), Nil))
+    assert(sparkReaderMeta(legacy) == lm)
+    assert(store.exists("legacy") && store.currentVersion("legacy") == 3)
+  }
+
+  test("read() returns the recorded columns, order and types of every layout") {
+    import org.apache.spark.sql.Row
+    val store = freshStore()
+    def sameAsVersionRead(t: String): Unit = {
+      val cur = store.read(t)
+      // readVersion keeps the Parquet-inferred / catalog read
+      val ref = store.readVersion(t, store.currentVersion(t))
+      assert(cur.schema == ref.schema, s"$t: ${cur.schema} vs ${ref.schema}")
+      assert(cur.collect().map(_.toString).sorted.toSeq ==
+        ref.collect().map(_.toString).sorted.toSeq)
+    }
+    val plain = Seq((1L, "a", 1.5, java.sql.Date.valueOf("2024-01-01")),
+      (2L, null, 2.5, null)).toDF("id", "s", "x", "d")
+    store.overwrite("plain", plain, primaryKeys = Seq("id"))
+    sameAsVersionRead("plain")
+    assert(store.read("plain").dtypes.toSeq == plain.dtypes.toSeq)
+    // hive-partitioned: data columns, then the partition column
+    store.overwrite("hive", plain, primaryKeys = Seq("id"), partitionBy = Seq("s"))
+    sameAsVersionRead("hive")
+    assert(store.read("hive").columns.toSeq == Seq("id", "x", "d", "s"))
+    store.overwrite("bucketed", plain, primaryKeys = Seq("id"), buckets = 4)
+    sameAsVersionRead("bucketed")
+    assert(store.read("bucketed").columns.toSeq == plain.columns.toSeq)
+    // non-nullable fields, nested types: the read is nullable, as Parquet
+    // inference made it
+    val strict = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("tags", ArrayType(StringType, containsNull = false), nullable = false),
+      StructField("attrs", MapType(StringType, IntegerType), nullable = true),
+      StructField("pt", StructType(Seq(StructField("a", IntegerType, nullable = false))),
+        nullable = false)))
+    val strictDf = spark.createDataFrame(java.util.Arrays.asList(
+      Row(1L, Seq("x"), Map("a" -> 1), Row(7)), Row(2L, Seq.empty[String], null, Row(8))), strict)
+    store.overwrite("strict", strictDf, primaryKeys = Seq("k"))
+    sameAsVersionRead("strict")
+    assert(store.read("strict").schema.forall(_.nullable))
+    // appended versions keep reading like the first
+    store.append("strict", strictDf.where($"k" === 1L))
+    sameAsVersionRead("strict")
+    assert(store.read("strict").count() == 3)
+  }
+
   test("Sources: layered read/write resolution and existence probes") {
     val tmp = Files.createTempDirectory("graft_layers")
     val sources = new graft.store.Sources(spark, Map(

@@ -132,6 +132,44 @@ class ValidationRunnerSpec extends AnyFunSuite {
     assert(store.read("val_detail").schema.fieldNames.toSeq == Monitor.detailSchema.fieldNames.toSeq)
   }
 
+  test("Monitor.save appends only the register's rows; earlier versions and " +
+      "schema evolution keep working") {
+    import graft.validate.Monitor
+    val store = new TableStore(spark, Files.createTempDirectory("graft-monitor-log").toString)
+    def register(day: Int) = Monitor.registerValidation(
+      java.sql.Timestamp.valueOf(f"2024-05-$day%02d 10:00:00"), Some("feature_store"),
+      "fs_cus_demographic", "historical", "ingestion", successfullySaved = true,
+      outcomes = Map("CROSS_CHECKING" -> Monitor.Outcome(Some("SUCCESS"), None)))
+    val k = 4
+    (1 to k).foreach(d => Monitor.save(spark, store, "val_summary", "val_detail", register(d)))
+    val next = register(k + 1)
+    val (_, c) = SparkCounters.measure(
+      Monitor.save(spark, store, "val_summary", "val_detail", next))
+    // only the new run's rows are written: no rewrite of the k earlier runs
+    assert(c.recordsWritten == 1 + next.detail.length)
+    assert(store.read("val_summary").count() == k + 1)
+    assert(store.read("val_detail").count() == (k + 1) * next.detail.length)
+    // the previous version still holds exactly the k earlier runs
+    val prev = store.currentVersion("val_summary") - 1
+    assert(store.readVersion("val_summary", prev).count() == k)
+    assert(store.readVersion("val_detail", store.currentVersion("val_detail") - 1)
+      .count() == k * next.detail.length)
+    // a column new to the table takes the rewrite path: every row is
+    // written again and the earlier rows are null-padded
+    import org.apache.spark.sql.functions.lit
+    val extra = spark.createDataFrame(java.util.Arrays.asList(next.summary),
+      Monitor.summarySchema).withColumn("note", lit("late"))
+    val (_, c2) = SparkCounters.measure(store.append("val_summary", extra))
+    assert(c2.recordsWritten == k + 2)
+    val evolved = store.read("val_summary")
+    assert(evolved.columns.toSeq == Monitor.summarySchema.fieldNames.toSeq :+ "note")
+    assert(evolved.where($"note".isNull).count() == k + 1)
+    assert(evolved.where($"note" === "late").count() == 1)
+    // rows without the new column are null-padded on the way in
+    store.append("val_summary", extra.drop("note"))
+    assert(store.read("val_summary").where($"note".isNull).count() == k + 2)
+  }
+
   test("source battery: format/existence/empty/readable with aggregated errors") {
     import graft.validate.SourceCheck
     val dir = Files.createTempDirectory("graft-sourcecheck").toString
